@@ -6,7 +6,8 @@ relational / streaming / LLM-data-pipeline operator surface (SURVEY.md §2.2).
 
 Layout:
 - ``core``       — the pipeline-orchestration DSL (Pipeline, V, >>, ALL/PREV)
-- ``session``    — SparkSession factory with scale-oriented defaults
+- ``session``    — SparkSession factory with scale-oriented defaults, the
+                   per-context state holder and scoped session conf
 - ``sources``    — readers/writers (parquet/csv/json/orc, partitioned sinks)
 - ``operators``  — relational verbs Spark lacks as single calls (as-of join,
                    dedup family, similarity search, text analysis, skew tools)

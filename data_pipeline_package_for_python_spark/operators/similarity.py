@@ -60,9 +60,8 @@ __all__ = [
 ]
 
 
+from ..session import current_session_state, session_state
 from ._util import collect_no_aqe as _collect_no_aqe
-from ._util import register_session_cache as _register_session_cache
-from ._util import sweep_session_caches as _sweep_session_caches
 
 
 def dot(a: str, b: str) -> F.Column:
@@ -547,40 +546,26 @@ def ivf_train_centroids(
     return cents
 
 
-# one live Broadcast per (application, codebook contents): repeated index
+# one live Broadcast per (context, codebook contents): repeated index
 # builds over the same codebook reuse the executor-resident copy instead
 # of accumulating fresh broadcasts (the same leak class BloomSketch's
-# cache/release closed in r10 for bloom bitmaps).  Dead-session handles
-# are dropped by the shared sweep (their executors are gone; destroy is
-# best-effort on whatever driver state remains).
-def _drop_codebook_broadcast(_key, bc) -> None:
-    bc.unpersist(blocking=False)
-    bc.destroy()
-
-
-_CODEBOOK_BC_CACHE: dict = _register_session_cache(
-    {}, cleanup=_drop_codebook_broadcast
-)
-
-
+# cache/release closed in r10 for bloom bitmaps).  The handles live on
+# the context's SessionState, which destroys them when it is replaced.
 def _codebook_broadcast(spark, Cn):
     """Session-cached Spark broadcast of a normalized codebook matrix.
 
-    Keyed by (applicationId, md5-of-bytes) so identical codebooks share
-    one executor copy and a new session never reuses a dead handle.
-    Release with :func:`release_codebook_broadcasts` when rotating
-    indexes in a long-lived session."""
+    Keyed by md5-of-bytes on the session state, so identical codebooks
+    share one executor copy and a new context never reuses a dead
+    handle.  Release with :func:`release_codebook_broadcasts` when
+    rotating indexes in a long-lived session."""
     import hashlib
 
-    key = (
-        spark.sparkContext.applicationId,
-        hashlib.md5(Cn.tobytes()).hexdigest(),
-    )
-    bc = _CODEBOOK_BC_CACHE.get(key)
-    if bc is None:
-        _sweep_session_caches(key[0])
-        bc = spark.sparkContext.broadcast(Cn)
-        _CODEBOOK_BC_CACHE[key] = bc
+    state = session_state(spark)
+    key = hashlib.md5(Cn.tobytes()).hexdigest()
+    with state.lock:
+        bc = state.broadcasts.get(key)
+        if bc is None:
+            bc = state.broadcasts[key] = spark.sparkContext.broadcast(Cn)
     return bc
 
 
@@ -593,16 +578,8 @@ def release_codebook_broadcasts() -> int:
     application lifetime.  Returns the number of broadcasts released.
     Safe after session teardown (destroy failures are swallowed, the
     cache is cleared regardless)."""
-    n = 0
-    for bc in _CODEBOOK_BC_CACHE.values():
-        try:
-            bc.unpersist(blocking=False)
-            bc.destroy()
-            n += 1
-        except Exception:
-            pass  # session already gone — nothing to free
-    _CODEBOOK_BC_CACHE.clear()
-    return n
+    state = current_session_state()
+    return 0 if state is None else state.release_broadcasts()
 
 
 def ivf_assign_codebook(
@@ -904,7 +881,11 @@ def semantic_dedup(
     size stays bounded (they use k=50k on LAION); here the cluster
     equality self-join is one shuffle on the cluster key and never a
     corpus×corpus product.  The k-means stage is map-only literal
-    assignment with k×d driver state."""
+    assignment with k×d driver state.
+
+    Concurrency: the k-means update collects run with AQE scoped off
+    (see :func:`kmeans_embeddings_exact`), so another driver thread
+    that plans a query during one of them plans it without AQE."""
     assigned = kmeans_embeddings_exact(
         df, id_col=id_col, vec_col=vec_col, k=k,
         iterations=iterations, scale=scale,
@@ -1052,6 +1033,10 @@ def kmeans_embeddings(
     Empty clusters keep their previous centroid.  Returns (id, cluster)
     with the final ``centroids`` list and per-iteration ``n_changed``
     trace attached as attributes.
+
+    Concurrency: each update collect runs with AQE scoped off, as in
+    :func:`kmeans_embeddings_exact`; a driver thread that plans a query
+    during one of them plans it without AQE.
     """
     # checkpointed like the exact twin (kmeans_embeddings_exact): the
     # frame is re-scanned by every iteration's update collect plus the
@@ -1129,7 +1114,14 @@ def kmeans_embeddings_exact(
     ``iterations`` (no early convergence break) so both engines run
     the identical schedule.  Empty clusters keep their previous
     centroid.  Overflow headroom: |u| ≤ ~scale ⇒ per-dim square ≤
-    4·scale², ×64 dims ≈ 2.6e14 ≪ 2⁶³."""
+    4·scale², ×64 dims ≈ 2.6e14 ≪ 2⁶³.
+
+    Concurrency: each update collect runs inside
+    ``session.scoped_conf`` with AQE off.  The scope's lock
+    serialises scoped sections only, so another driver thread that
+    plans a query while an update collect runs plans it without AQE
+    (Spark conf is session-global); its results are unchanged, only
+    its runtime re-planning is skipped."""
     uexpr = (
         f"transform({vec_col}, x -> CAST(floor(CAST(x AS DOUBLE)"
         f" * {int(scale)} + 0.5d) AS BIGINT))"
@@ -1180,8 +1172,8 @@ def kmeans_embeddings_exact(
     # (codegen fallback, 4-5× slower than the zip_with HOF) and the
     # centroid matrix as ONE nested-array literal (py4j/analysis of the
     # nested literal ~5× the literal-SQL build).  What stays: AQE is
-    # disabled around the update collect (scoped set/restore, the
-    # streaming _scoped_state_parallelism precedent) — the update is a
+    # disabled around the update collect (``collect_no_aqe``, one
+    # ``scoped_conf`` section per iteration) — the update is a
     # FIXED k×d-group two-stage aggregate whose output is k×d rows, so
     # runtime re-planning can neither coalesce anything useful nor hit
     # skew at ANY scale, and dropping it halves the per-iteration job

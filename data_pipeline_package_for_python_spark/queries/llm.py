@@ -19,12 +19,12 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ._registry import load, query
-from ..operators import _util as _outil
 from ..operators import dedup as D
 from ..operators import graph as G
 from ..operators import multimodal as M
 from ..operators import similarity as S
 from ..operators import text as T
+from ..session import session_state
 
 _DOT = (
     "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
@@ -1948,32 +1948,14 @@ def multimodal_jpeg_roundtrip(spark, sf_dir):
 
 # one tiny JPEG corpus per (session, sf_dir), written ONCE driver-side —
 # a stand-in for the ingest layout (production JPEG corpora already sit
-# on distributed storage; the query under test is the READ side).
-# Dead-session corpora (entry + tempdir) are reclaimed by the shared
-# session-cache sweep.
-def _drop_jpeg_corpus(_key, path) -> None:
-    import shutil
-
-    shutil.rmtree(path, ignore_errors=True)
-
-
-_JPEG_CORPUS_CACHE: dict = _outil.register_session_cache(
-    {}, cleanup=_drop_jpeg_corpus
-)
-
-
+# on distributed storage; the query under test is the READ side).  The
+# session state reclaims the directory with its context.
 def _jpeg_corpus_dir(spark, sf_dir: str) -> str:
-    import tempfile
-
     import numpy as np
 
     from ..operators.jpeg import jpeg_encode
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    d = _JPEG_CORPUS_CACHE.get(key)
-    if d is None:
-        _outil.sweep_session_caches(key[0])
-        d = tempfile.mkdtemp(prefix="dpp_jpeg_corpus_")
+    def build(d: str) -> None:
         ids = [
             int(r.doc_id)
             for r in load(spark, sf_dir, "documents")
@@ -1996,8 +1978,8 @@ def _jpeg_corpus_dir(spark, sf_dir: str) -> str:
                 fh.write(
                     jpeg_encode(w, h, src.tobytes(), restart_interval=3)
                 )
-        _JPEG_CORPUS_CACHE[key] = d
-    return d
+
+    return session_state(spark).staged_dir(("jpeg_corpus", sf_dir), build)
 
 
 @query(

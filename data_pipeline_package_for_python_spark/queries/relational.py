@@ -16,7 +16,6 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ._registry import davg, dsum, load, query, ssum
-from ..operators import _util
 from ..operators.joins import (
     asof_join,
     asof_join_nearest,
@@ -25,6 +24,7 @@ from ..operators.joins import (
     range_join,
     star_join,
 )
+from ..session import scoped_conf, session_state
 
 # ---------------------------------------------------------------------- #
 # §2.2.1 scans                                                           #
@@ -173,25 +173,20 @@ def scan_jdbc_roundtrip(spark, sf_dir):
     matters at scale, where an unpartitioned JDBC read funnels the
     whole table through one connection).  The database is staged once
     per (session, sf_dir) like the other round-trip fixtures."""
-    import os
-    import tempfile
-
     from ..sources import read_jdbc, write_jdbc
 
-    key = ("jdbc_derby", sf_dir)
     props = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
-    url = _JDBC_STAGE.get(key)
-    if url is None:
-        db = os.path.join(tempfile.mkdtemp(prefix="dpp_derby_"), "db")
-        url = f"jdbc:derby:{db};create=true"
-        write_jdbc(
+    stage = session_state(spark).staged_dir(
+        ("derby", sf_dir),
+        lambda d: write_jdbc(
             load(spark, sf_dir, "nation"),
-            url,
+            f"jdbc:derby:{d}/db;create=true",
             "nation_t",
             mode="overwrite",
             properties=props,
-        )
-        _JDBC_STAGE[key] = url
+        ),
+    )
+    url = f"jdbc:derby:{stage}/db;create=true"
     back = read_jdbc(
         spark,
         url,
@@ -203,9 +198,6 @@ def scan_jdbc_roundtrip(spark, sf_dir):
         properties=props,
     )
     return back.select("n_nationkey", "n_name", "n_regionkey")
-
-
-_JDBC_STAGE: dict[tuple[str, str], str] = {}
 
 
 @query(
@@ -286,20 +278,17 @@ def scan_partition_pruning(spark, sf_dir):
     the difference between reading one directory and reading the
     lake."""
     import os
-    import tempfile
 
     from .. import plans
     from ..sources import write_parquet
 
-    key = ("prune_stage", sf_dir)
-    path = _TEXT_STAGE.get(key)
-    if path is None:
-        path = tempfile.mkdtemp(prefix="dpp_prune_") + "/orders"
-        write_parquet(
-            load(spark, sf_dir, "orders"), path,
+    path = session_state(spark).staged_dir(
+        ("prune", sf_dir),
+        lambda d: write_parquet(
+            load(spark, sf_dir, "orders"), f"{d}/orders",
             partition_by=["o_orderstatus"],
-        )
-        _TEXT_STAGE[key] = path
+        ),
+    ) + "/orders"
     back = spark.read.parquet(path)
     n_total = len([
         d for d in os.listdir(path) if d.startswith("o_orderstatus=")
@@ -1157,37 +1146,27 @@ def _orders_side_fits_broadcast(spark, orders_side, token=None) -> bool:
     thr = plans.broadcast_threshold_bytes(spark)
     if thr <= 0:
         return False
-    # applicationId, not id(spark): id() can be recycled after a
-    # stopped session is GC'd, letting a new session inherit a stale
-    # gate verdict; the app id is unique per SparkContext lifetime.
-    app_id = spark.sparkContext.applicationId
+    # the memo lives on the context's SessionState: a new context starts
+    # with an empty one, so it can never inherit a stale verdict.
+    gates = session_state(spark).gates
     if token is not None:
         # Fast memo: a caller-supplied (query, dataset) token lets the
         # verdict be reused WITHOUT re-building the probe frame at all —
         # constructing it costs 2 eager analyzer passes (~30 ms of the
         # old per-run build), and ``orders_side`` may then be passed as
         # a zero-arg thunk that is only invoked on a miss.
-        tkey = (app_id, token, thr)
-        hit = _GATE_CACHE.get(tkey)
+        hit = gates.get((token, thr))
         if hit is not None:
             return hit
     frame = orders_side() if callable(orders_side) else orders_side
-    key = (
-        app_id,
-        frame._jdf.queryExecution().logical().semanticHash(),
-        thr,
-    )
-    hit = _GATE_CACHE.get(key)
+    key = (frame._jdf.queryExecution().logical().semanticHash(), thr)
+    hit = gates.get(key)
     if hit is None:
-        _util.sweep_session_caches(app_id)
         hit = plans.estimated_size_bytes(frame) <= thr
-        _GATE_CACHE[key] = hit
+        gates[key] = hit
     if token is not None:
-        _GATE_CACHE[(app_id, token, thr)] = hit
+        gates[(token, thr)] = hit
     return hit
-
-
-_GATE_CACHE: dict[tuple, bool] = _util.register_session_cache({})
 
 
 @query(
@@ -1412,21 +1391,10 @@ def join_q3_topk(spark, sf_dir):
 # the layout is written ONCE and every order-key join over it plans with
 # zero exchanges on the fact edge — the 100 TB posture where the shuffle
 # is paid at ingest time and amortizes over the whole query mix.
-# value = ((orders_name, lineitem_name), tempdir) so the release path
-# can drop the catalog tables AND reclaim the multi-GB data directory.
-# Dead-session entries are swept by the shared registry (their catalog
-# died with the session; the tempdir is what the cleanup reclaims).
-def _drop_bucketed_tempdir(_key, value) -> None:
-    import shutil
-
-    shutil.rmtree(value[1], ignore_errors=True)
-
-
-_BUCKETED_PAIR_CACHE: dict[
-    tuple[str, str, int], tuple[tuple[str, str], str]
-] = _util.register_session_cache({}, cleanup=_drop_bucketed_tempdir)
-
-
+# SessionState.layouts maps (sf_dir, n_buckets[, "star"]) to
+# ((table names), tempdir) so the release path can drop the catalog
+# tables AND reclaim the multi-GB data directory; a replaced context's
+# holder reclaims the tempdirs (its catalog died with the session).
 def bucketed_order_tables(spark, sf_dir: str, n_buckets: int = 8):
     """(orders, lineitem) as catalog tables bucketed + sorted on the
     order key with the same bucket count — the co-location layout for
@@ -1469,10 +1437,10 @@ def bucketed_order_tables(spark, sf_dir: str, n_buckets: int = 8):
     spark.conf.set(
         "spark.sql.legacy.bucketedTableScan.outputOrdering", "true"
     )
-    key = (spark.sparkContext.applicationId, sf_dir, n_buckets)
-    hit = _BUCKETED_PAIR_CACHE.get(key)
+    layouts = session_state(spark).layouts
+    key = (sf_dir, n_buckets)
+    hit = layouts.get(key)
     if hit is None:
-        _util.sweep_session_caches(key[0])
         # stable digest, NOT Python hash(): PYTHONHASHSEED randomizes
         # hash() per process, so with a persistent metastore every new
         # process would mint a fresh table name and orphan the old
@@ -1505,7 +1473,7 @@ def bucketed_order_tables(spark, sf_dir: str, n_buckets: int = 8):
             sort_by="l_orderkey", path=f"{base}/lineitem",
         )
         hit = (names, base)
-        _BUCKETED_PAIR_CACHE[key] = hit
+        layouts[key] = hit
     return spark.table(hit[0][0]), spark.table(hit[0][1])
 
 
@@ -1541,10 +1509,10 @@ def bucketed_star_tables(spark, sf_dir: str, n_buckets: int = 8):
     # the plain pair supplies the shared lineitem table (cached)
     _, lib = bucketed_order_tables(spark, sf_dir, n_buckets)
 
-    key = (spark.sparkContext.applicationId, sf_dir, n_buckets, "star")
-    hit = _BUCKETED_PAIR_CACHE.get(key)
+    layouts = session_state(spark).layouts
+    key = (sf_dir, n_buckets, "star")
+    hit = layouts.get(key)
     if hit is None:
-        _util.sweep_session_caches(key[0])
         suffix = hashlib.md5(
             f"{sf_dir}:{n_buckets}:star".encode()
         ).hexdigest()[:8]
@@ -1573,7 +1541,7 @@ def bucketed_star_tables(spark, sf_dir: str, n_buckets: int = 8):
             sort_by="o_orderkey", path=f"{base}/orders_star",
         )
         hit = ((name,), base)
-        _BUCKETED_PAIR_CACHE[key] = hit
+        layouts[key] = hit
     return spark.table(hit[0][0]), lib
 
 
@@ -1588,28 +1556,26 @@ def release_bucketed_order_tables(spark) -> int:
     without it an sf10 layout (multi-GB tempdir + 2 external tables per
     sf_dir) is immortal for the process lifetime.  Mirrors
     ``BloomSketch.release()``: call when rotating layouts or at the end
-    of a bench session.  Only pairs owned by THIS application are
-    touched; entries from a dead session are evicted from the cache but
-    their tables belong to a catalog that no longer exists."""
+    of a bench session.  Only this session's context holds layouts; a
+    replaced context's holder already reclaimed its tempdirs."""
     import shutil
 
-    app = spark.sparkContext.applicationId
-    released = 0
-    for key in list(_BUCKETED_PAIR_CACHE):
-        (names, base) = _BUCKETED_PAIR_CACHE.pop(key)
-        if key[0] == app:
-            for name in names:
-                try:
-                    spark.sql(f"DROP TABLE IF EXISTS {name}")
-                except Exception:
-                    pass  # catalog already gone — tempdir still removed
-            released += 1
+    state = session_state(spark)
+    with state.lock:
+        layouts = list(state.layouts.values())
+        state.layouts.clear()
+    for names, base in layouts:
+        for name in names:
+            try:
+                spark.sql(f"DROP TABLE IF EXISTS {name}")
+            except Exception:
+                pass  # catalog already gone — tempdir still removed
         shutil.rmtree(base, ignore_errors=True)
     try:
         spark.conf.unset("spark.sql.legacy.bucketedTableScan.outputOrdering")
     except Exception:
         pass  # session already stopped — nothing to restore
-    return released
+    return len(layouts)
 
 
 def q3_over_bucketed(spark, orders_b, lineitem_b, customer):
@@ -2968,18 +2934,12 @@ def sink_partition_overwrite(spark, sf_dir):
         )
         .withColumn("o_totalprice", F.col("o_totalprice") + 1000)
     )
-    conf_key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, "dynamic")
-    try:
+    with scoped_conf(
+        spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+    ):
         batch.write.mode("overwrite").partitionBy(
             "o_orderstatus"
         ).parquet(path)
-    finally:
-        if prev is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev)
     back = spark.read.parquet(path)
     return back.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n"),
@@ -3734,16 +3694,11 @@ def scan_text_roundtrip(spark, sf_dir):
     table.  The fixture's documents are single-line by construction;
     a corpus with embedded newlines takes the `wholetext`/custom-
     delimiter options on the same reader."""
-    import tempfile
-
-    key = ("text_stage", sf_dir)
-    path = _TEXT_STAGE.get(key)
-    if path is None:
-        path = tempfile.mkdtemp(prefix="dpp_text_")
-        load(spark, sf_dir, "documents").select("text").write.mode(
-            "overwrite"
-        ).text(path)
-        _TEXT_STAGE[key] = path
+    path = session_state(spark).staged_dir(
+        ("text", sf_dir),
+        lambda d: load(spark, sf_dir, "documents").select("text")
+        .write.mode("overwrite").text(d),
+    )
     back = spark.read.text(path)
     return back.agg(
         F.count(F.lit(1)).alias("n_lines"),
@@ -3751,9 +3706,6 @@ def scan_text_roundtrip(spark, sf_dir):
         F.min(F.length("value")).alias("min_len"),
         F.max(F.length("value")).alias("max_len"),
     )
-
-
-_TEXT_STAGE: dict[tuple[str, str], str] = {}
 
 
 @query(
@@ -3779,16 +3731,12 @@ def scan_jsonl_gzip_roundtrip(spark, sf_dir):
     (per-lang counts, char mass, an ORDER-pinned id digest) must match
     the original table exactly — one dropped or doubled line after
     the compress/decompress round-trip diverges the hash."""
-    import tempfile
-
-    key = ("jsonl_gz_stage", sf_dir)
-    path = _TEXT_STAGE.get(key)
-    if path is None:
-        path = tempfile.mkdtemp(prefix="dpp_jsonlgz_")
-        load(spark, sf_dir, "documents").select(
-            "doc_id", "text", "lang"
-        ).write.mode("overwrite").option("compression", "gzip").json(path)
-        _TEXT_STAGE[key] = path
+    path = session_state(spark).staged_dir(
+        ("jsonlgz", sf_dir),
+        lambda d: load(spark, sf_dir, "documents")
+        .select("doc_id", "text", "lang")
+        .write.mode("overwrite").option("compression", "gzip").json(d),
+    )
     back = spark.read.json(path)
     return back.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),

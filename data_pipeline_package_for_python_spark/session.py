@@ -15,16 +15,26 @@ Everything here targets the same configuration posture we would ship to a
 
 The reference system (/root/reference/dpp.py) has no session concept at all —
 it is a single-process dict of Python objects (dpp.py:178).  This module is
-the Spark-native replacement for "a place where data lives".
+the Spark-native replacement for "a place where data lives": it also owns
+the one holder of per-context state (:func:`session_state`) and the one
+way to override session conf for a bounded section (:func:`scoped_conf`).
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
+import threading
+from contextlib import contextmanager
+from typing import Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["get_spark", "stop_spark"]
+__all__ = [
+    "SessionState", "current_session_state", "get_spark", "scoped_conf",
+    "session_state", "stop_spark",
+]
 
 
 def _default_parallelism() -> int:
@@ -147,3 +157,155 @@ def stop_spark() -> None:
     active = SparkSession.getActiveSession()
     if active is not None:
         active.stop()
+
+
+# --------------------------------------------------------------------- #
+# scoped session conf                                                   #
+# --------------------------------------------------------------------- #
+
+# Held for the whole scope: two overlapping save/set/restore sections on
+# one key otherwise interleave as A-set, B-save, A-restore, B-restore and
+# leave A's override behind for good.  Re-entrant so a scoped section may
+# call code that scopes another key.  The lock serialises SCOPED sections
+# only — a bystander thread planning inside another thread's scope sees
+# the override (Spark conf is session-global); callers keep scopes to
+# what must observe the value (a read, a start(), one collect).
+_CONF_LOCK = threading.RLock()
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, overrides: dict[str, str]):
+    """Set ``overrides`` for the ``with`` body, then restore each key's
+    prior value (or unset it if it had none)."""
+    with _CONF_LOCK:
+        prev = {k: spark.conf.get(k, None) for k in overrides}
+        try:
+            for k, v in overrides.items():
+                spark.conf.set(k, v)
+            yield
+        finally:
+            for k, v in prev.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+
+
+# --------------------------------------------------------------------- #
+# per-session state                                                     #
+# --------------------------------------------------------------------- #
+
+class SessionState:
+    """Everything the engine keeps for one live SparkContext.  Keys
+    carry no application id: a new context gets a new holder and the
+    old one is released as a unit (:meth:`release`)."""
+
+    def __init__(self, sc) -> None:
+        # strong ref: the identity check in session_state can never be
+        # fooled by a recycled id()
+        self.sc = sc
+        self.lock = threading.Lock()
+        # (sf_dir, table) -> scan DataFrame (queries._registry.load)
+        self.scans: dict[tuple[str, str], DataFrame] = {}
+        # (token | plan hash, threshold) -> broadcast-gate verdict
+        self.gates: dict[tuple, bool] = {}
+        # id(frame) -> (weakref to frame, repartitioned frame)
+        # (operators._util.ensure_parallel)
+        self.parallel: dict[int, tuple] = {}
+        # (session, tag) -> the one persisted frame of that slot
+        # (operators._util.swap_cache)
+        self.slots: dict[tuple, DataFrame] = {}
+        # (kind, sf_dir) -> staged fixture directory (see staged_dir)
+        self.tempdirs: dict[tuple, str] = {}
+        # (sf_dir, n_buckets[, "star"]) -> (catalog table names, directory)
+        # (queries.relational.bucketed_order_tables)
+        self.layouts: dict[tuple, tuple[tuple[str, ...], str]] = {}
+        # codebook digest -> Broadcast (operators.similarity)
+        self.broadcasts: dict[str, object] = {}
+
+    def staged_dir(self, key: tuple, build: Callable[[str], None]) -> str:
+        """A fresh directory filled once per (context, ``key``) by
+        ``build(path)``; the holder reclaims it on release.  Concurrent
+        first calls may both build — the first to finish wins and the
+        loser's directory is removed."""
+        path = self.tempdirs.get(key)
+        if path is not None:
+            return path
+        fresh = tempfile.mkdtemp(prefix=f"dpp_{key[0]}_")
+        try:
+            build(fresh)
+        except BaseException:
+            shutil.rmtree(fresh, ignore_errors=True)
+            raise
+        with self.lock:
+            path = self.tempdirs.setdefault(key, fresh)
+        if path is not fresh:
+            shutil.rmtree(fresh, ignore_errors=True)
+        return path
+
+    def release_broadcasts(self) -> int:
+        """Unpersist and destroy every cached broadcast; returns how many
+        were released (failures on a stopped context are swallowed)."""
+        with self.lock:
+            bcs = list(self.broadcasts.values())
+            self.broadcasts.clear()
+        n = 0
+        for bc in bcs:
+            try:
+                bc.unpersist(blocking=False)
+                bc.destroy()
+                n += 1
+            except Exception:
+                pass  # context already gone — nothing left to free
+        return n
+
+    def release(self) -> None:
+        """Free everything: unpersist slot frames, destroy broadcasts,
+        remove staged and layout directories, forget every memo.  Runs
+        when a new context replaces this one, so each step is
+        best-effort (the old context is usually stopped by then)."""
+        with self.lock:
+            frames = list(self.slots.values())
+            dirs = list(self.tempdirs.values())
+            dirs += [base for _names, base in self.layouts.values()]
+            for memo in (self.scans, self.gates, self.parallel, self.slots,
+                         self.tempdirs, self.layouts):
+                memo.clear()
+        for frame in frames:
+            try:
+                frame.unpersist()
+            except Exception:
+                pass  # stopped context — its blocks died with it
+        self.release_broadcasts()
+        for d in dirs:
+            shutil.rmtree(d, ignore_errors=True)
+
+
+_STATE: SessionState | None = None
+_STATE_LOCK = threading.Lock()
+
+
+def session_state(spark: SparkSession) -> SessionState:
+    """The :class:`SessionState` of ``spark``'s SparkContext; when a
+    different context appears, the previous holder is released."""
+    # a hit is one attribute read and one identity compare — no py4j
+    # call — so per-query paths (load, the gate memo, ensure_parallel)
+    # consult it freely
+    global _STATE
+    sc = spark.sparkContext
+    state = _STATE
+    if state is not None and state.sc is sc:
+        return state
+    with _STATE_LOCK:
+        old = _STATE
+        if old is not None and old.sc is sc:
+            return old
+        state = _STATE = SessionState(sc)
+    if old is not None:
+        old.release()
+    return state
+
+
+def current_session_state() -> SessionState | None:
+    """The holder of the most recent context (None before first use)."""
+    return _STATE

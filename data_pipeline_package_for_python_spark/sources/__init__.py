@@ -18,12 +18,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from ..session import scoped_conf
+
 __all__ = [
     "TPCH_TABLES",
     "load_tables",
     "prepare_media_dir",
     "read_binary_files",
     "read_csv",
+    "read_events",
     "read_jdbc",
     "read_json",
     "read_orc",
@@ -47,6 +50,28 @@ TPCH_TABLES = (
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
+
+
+def read_events(spark: SparkSession, path: str) -> DataFrame:
+    """The ``events`` parquet table with ``ts`` as a plain TIMESTAMP
+    (the session TZ is pinned to UTC), whatever the fixture wrote."""
+    # * TIMESTAMP_NS parquet is rejected by default (PARQUET_TYPE_ILLEGAL):
+    #   read nanos as long, floor-divide to µs — exactly DuckDB's
+    #   CAST(TIMESTAMP_NS AS TIMESTAMP);
+    # * µs parquet with isAdjustedToUTC=false infers TIMESTAMP_NTZ: cast
+    #   to TIMESTAMP (value-preserving under the UTC session).
+    # The legacy flag is consumed at schema resolution, so it is scoped
+    # around the read alone; executing the frame later needs no override.
+    from pyspark.sql import functions as F
+
+    with scoped_conf(spark, {"spark.sql.legacy.parquet.nanosAsLong": "true"}):
+        df = spark.read.parquet(path)
+    ts_type = dict(df.dtypes).get("ts")
+    if ts_type == "bigint":
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if ts_type == "timestamp_ntz":
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
 
 
 def read_csv(

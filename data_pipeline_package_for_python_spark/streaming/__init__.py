@@ -37,6 +37,9 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import scoped_conf
+from ..sources import read_events
+
 __all__ = [
     "EVENTS_DDL",
     "prepare_events_stream_dir",
@@ -94,64 +97,48 @@ def prepare_events_stream_dir(
     out = os.path.join(base, f"{tag}_events_{n_files}")
     if os.path.exists(os.path.join(out, "_SUCCESS")):
         return out
-    prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try:
-        df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type == "timestamp_ntz":
-            # µs parquet annotated isAdjustedToUTC=false infers NTZ; event
-            # time / watermarks / unix_micros need plain TIMESTAMP (UTC
-            # session makes the cast value-preserving).
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        # split by event-time order so each staged file is a contiguous time
-        # range -> oldest-file-first replay is a realistic arrival order
-        from pyspark.sql.window import Window
+    df = read_events(spark, os.path.join(sf_dir, "events.parquet"))
+    # split by event-time order so each staged file is a contiguous time
+    # range -> oldest-file-first replay is a realistic arrival order
+    from pyspark.sql.window import Window
 
-        df = df.withColumn(
-            "_bucket",
-            F.ntile(n_files).over(Window.orderBy("ts", "event_id")),
-        )
-        # One contiguous time range per FILE, and lexicographic file
-        # order == time order: repartitionByRange maps the n_files
-        # bucket values monotonically onto n_files partitions, so
-        # part-00000 is the oldest slice.  (A plain repartition(col)
-        # HASHES the bucket id — at sf0.1 buckets 1 and 3 collided into
-        # part-00000, the replay delivered Jan-23 data before Jan-8
-        # data, and the advanced watermark silently dropped thousands
-        # of genuine interval-join matches.  FileStreamSource breaks
-        # equal-mtime ties by path, so partition index IS arrival
-        # order.)
-        (
-            df.repartitionByRange(n_files, "_bucket")
-            .sortWithinPartitions("ts", "event_id")
-            .drop("_bucket")
-            .write.mode("overwrite")
-            .parquet(out)
-        )
-        # FileStreamSource orders ONLY by modification time — files
-        # written by one job share an mtime (to the µs) and then replay
-        # in arbitrary listing order (observed: file4 before file3,
-        # which advanced the watermark ~7 days early and silently
-        # dropped a third of the interval-join matches as late data).
-        # Strictly increasing mtimes in partition order make arrival
-        # order == event-time order, the property every oracle here
-        # assumes.
-        parts = sorted(
-            f for f in os.listdir(out)
-            if f.startswith("part-") and f.endswith(".parquet")
-        )
-        t0 = time.time() - 60.0
-        for i, fname in enumerate(parts):
-            fpath = os.path.join(out, fname)
-            os.utime(fpath, (t0 + 10.0 * i, t0 + 10.0 * i))
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-        else:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
+    df = df.withColumn(
+        "_bucket",
+        F.ntile(n_files).over(Window.orderBy("ts", "event_id")),
+    )
+    # One contiguous time range per FILE, and lexicographic file
+    # order == time order: repartitionByRange maps the n_files
+    # bucket values monotonically onto n_files partitions, so
+    # part-00000 is the oldest slice.  (A plain repartition(col)
+    # HASHES the bucket id — at sf0.1 buckets 1 and 3 collided into
+    # part-00000, the replay delivered Jan-23 data before Jan-8
+    # data, and the advanced watermark silently dropped thousands
+    # of genuine interval-join matches.  FileStreamSource breaks
+    # equal-mtime ties by path, so partition index IS arrival
+    # order.)
+    (
+        df.repartitionByRange(n_files, "_bucket")
+        .sortWithinPartitions("ts", "event_id")
+        .drop("_bucket")
+        .write.mode("overwrite")
+        .parquet(out)
+    )
+    # FileStreamSource orders ONLY by modification time — files
+    # written by one job share an mtime (to the µs) and then replay
+    # in arbitrary listing order (observed: file4 before file3,
+    # which advanced the watermark ~7 days early and silently
+    # dropped a third of the interval-join matches as late data).
+    # Strictly increasing mtimes in partition order make arrival
+    # order == event-time order, the property every oracle here
+    # assumes.
+    parts = sorted(
+        f for f in os.listdir(out)
+        if f.startswith("part-") and f.endswith(".parquet")
+    )
+    t0 = time.time() - 60.0
+    for i, fname in enumerate(parts):
+        fpath = os.path.join(out, fname)
+        os.utime(fpath, (t0 + 10.0 * i, t0 + 10.0 * i))
     return out
 
 
@@ -374,34 +361,20 @@ def stream_stream_interval_join(
     return l.join(r, cond, how).drop(r[on])
 
 
-class _scoped_state_parallelism:
-    """Harness-only: start a streaming query with a small state-store
-    parallelism, then restore the session default.
+def _state_conf(state_partitions: int | None) -> dict[str, str]:
+    """Harness-only state-store right-sizing, scoped around ``start()``.
 
     A stateful streaming op creates one state-store instance per shuffle
-    partition *per micro-batch* (checkpoint delta files, store init/commit);
-    at harness scale (sf≤0.01, thousands of rows) the session's default 32
-    partitions are pure fixed cost — measured ~2× of the drain wall time.
-    The partition count is pinned into the query's checkpoint at START, so
-    scoping the conf around ``start()`` is sufficient and thread-safe here
-    (the harness runs queries sequentially).  Production flows never pass
-    through this helper and keep the session/cluster setting.
-    """
-
-    KEY = "spark.sql.shuffle.partitions"
-
-    def __init__(self, spark: SparkSession, n: int = 4):
-        self.spark, self.n = spark, n
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get(self.KEY, None)
-        self.spark.conf.set(self.KEY, str(self.n))
-
-    def __exit__(self, *exc):
-        if self.prev is None:
-            self.spark.conf.unset(self.KEY)
-        else:
-            self.spark.conf.set(self.KEY, self.prev)
+    partition *per micro-batch* (checkpoint delta files, store
+    init/commit); at harness scale (sf≤0.01, thousands of rows) the
+    session's default 32 partitions are pure fixed cost — measured ~2× of
+    the drain wall time.  The query clones the session conf at
+    ``start()`` and pins the partition count into its checkpoint, so
+    scoping the conf around ``start()`` alone is sufficient.  Production
+    flows pass ``None`` and keep the session/cluster setting."""
+    if state_partitions is None:
+        return {}
+    return {"spark.sql.shuffle.partitions": str(state_partitions)}
 
 
 def run_available_now(
@@ -431,11 +404,8 @@ def run_available_now(
         .trigger(availableNow=True)
         .option("checkpointLocation", ckpt)
     )
-    if state_partitions is None:
+    with scoped_conf(spark, _state_conf(state_partitions)):
         q = writer.start()
-    else:
-        with _scoped_state_parallelism(spark, state_partitions):
-            q = writer.start()
     try:
         q.awaitTermination(timeout_s)
     finally:
@@ -469,11 +439,8 @@ def foreach_batch_parquet(
         .trigger(availableNow=True)
         .option("checkpointLocation", ckpt)
     )
-    if state_partitions is None:
+    with scoped_conf(stream.sparkSession, _state_conf(state_partitions)):
         q = writer.start()
-    else:
-        with _scoped_state_parallelism(stream.sparkSession, state_partitions):
-            q = writer.start()
     try:
         q.awaitTermination(timeout_s)
     finally:
@@ -572,6 +539,54 @@ def cascade_agg(
     )
 
 
+def _drain(writer, spark: SparkSession, is_drained, timeout_s, poll_s) -> None:
+    """Start ``writer`` on a 50 ms processing-time trigger and poll
+    ``lastProgress`` until ``is_drained(source progress)`` holds and a
+    batch processed 0 rows, then stop the query.
+
+    The predicate needs a PROGRESS EVENT for the final empty batch, but
+    Spark throttles no-data progress reporting to one event per 10 s
+    (noDataProgressEventInterval) — measured as a flat 10 s stall after
+    the source was already exhausted.  Like the state-partition count,
+    the interval is captured when the query starts, so both are scoped
+    around ``start()`` only and the drain loop runs outside the scope.
+    Offsets arrive as JSON-ish strings OR dicts depending on the source;
+    string offsets are parsed before the predicate sees them."""
+    import ast
+
+    overrides = {
+        "spark.sql.streaming.noDataProgressEventInterval": "100ms",
+        **_state_conf(4),
+    }
+    with scoped_conf(spark, overrides):
+        q = (
+            writer.trigger(processingTime="50 milliseconds")
+            .option("checkpointLocation", tempfile.mkdtemp(prefix="dpp_ckpt_"))
+            .start()
+        )
+    try:
+        deadline = time.time() + timeout_s
+        while time.time() < deadline:
+            time.sleep(poll_s)
+            if q.exception():
+                raise q.exception()
+            p = q.lastProgress
+            if not p or not p.get("sources"):
+                continue
+            src = dict(p["sources"][0])
+            eo = src.get("endOffset")
+            if isinstance(eo, str):
+                try:
+                    src["endOffset"] = ast.literal_eval(eo)
+                except (ValueError, SyntaxError):
+                    pass
+            if is_drained(src) and p.get("numInputRows", -1) == 0:
+                break
+    finally:
+        if q.isActive:
+            q.stop()
+
+
 def run_until_offset(
     result: DataFrame,
     is_drained,
@@ -588,63 +603,16 @@ def run_until_offset(
     time, so AvailableNow stops after the single batch known at start.
     Polling ``lastProgress`` until the source's endOffset reaches its
     terminal value (and a batch processed 0 rows) is the general drain
-    loop; offsets arrive as JSON-ish strings OR dicts depending on the
-    source, so the predicate receives the raw progress dict and
-    decides.
+    loop; the predicate receives the raw progress dict and decides.
     """
-    import ast
-    import time as _time
-
-    spark = result.sparkSession
     name = _unique_name("dpp_mem")
-    ckpt = tempfile.mkdtemp(prefix="dpp_ckpt_")
-    # The drain predicate needs a PROGRESS EVENT for the final empty
-    # batch, but Spark throttles no-data progress reporting to one
-    # event per 10 s (noDataProgressEventInterval) — measured as a
-    # flat 10 s observability stall after the source was already
-    # exhausted.  Report promptly for the drain loop's lifetime.
-    _NODATA_KEY = "spark.sql.streaming.noDataProgressEventInterval"
-    prev_nodata = spark.conf.get(_NODATA_KEY, None)
-    spark.conf.set(_NODATA_KEY, "100ms")
-    # query start lives INSIDE the protected region: if start() raises,
-    # the finally below still restores the session-wide conf override
-    # (round-4 advice — the set-before-try shape leaked it permanently).
-    q = None
-    try:
-        with _scoped_state_parallelism(spark, 4):
-            q = (
-                result.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(output_mode)
-                .trigger(processingTime="50 milliseconds")
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-        deadline = _time.time() + timeout_s
-        while _time.time() < deadline:
-            _time.sleep(poll_s)
-            if q.exception():
-                raise q.exception()
-            p = q.lastProgress
-            if not p or not p.get("sources"):
-                continue
-            src = dict(p["sources"][0])
-            eo = src.get("endOffset")
-            if isinstance(eo, str):
-                try:
-                    src["endOffset"] = ast.literal_eval(eo)
-                except (ValueError, SyntaxError):
-                    pass
-            if is_drained(src) and p.get("numInputRows", -1) == 0:
-                break
-    finally:
-        if q is not None and q.isActive:
-            q.stop()
-        if prev_nodata is None:
-            spark.conf.unset(_NODATA_KEY)
-        else:
-            spark.conf.set(_NODATA_KEY, prev_nodata)
-    return spark.table(name)
+    writer = (
+        result.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+    )
+    _drain(writer, result.sparkSession, is_drained, timeout_s, poll_s)
+    return result.sparkSession.table(name)
 
 
 def drain_to_sink(
@@ -661,47 +629,9 @@ def drain_to_sink(
     DataSourceStreamWriter) instead of the in-memory table, with the
     same offset-predicate drain loop and prompt no-data progress
     reporting.  Returns nothing — the sink's files ARE the output."""
-    import ast
-    import time as _time
-
-    spark = result.sparkSession
-    ckpt = tempfile.mkdtemp(prefix="dpp_ckpt_")
-    _NODATA_KEY = "spark.sql.streaming.noDataProgressEventInterval"
-    prev_nodata = spark.conf.get(_NODATA_KEY, None)
-    spark.conf.set(_NODATA_KEY, "100ms")
-    # start() inside the protected region — see run_until_offset.
-    q = None
-    try:
-        with _scoped_state_parallelism(spark, 4):
-            q = (
-                result.writeStream.format(fmt)
-                .options(**options)
-                .outputMode(output_mode)
-                .trigger(processingTime="50 milliseconds")
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-        deadline = _time.time() + timeout_s
-        while _time.time() < deadline:
-            _time.sleep(poll_s)
-            if q.exception():
-                raise q.exception()
-            p = q.lastProgress
-            if not p or not p.get("sources"):
-                continue
-            src = dict(p["sources"][0])
-            eo = src.get("endOffset")
-            if isinstance(eo, str):
-                try:
-                    src["endOffset"] = ast.literal_eval(eo)
-                except (ValueError, SyntaxError):
-                    pass
-            if is_drained(src) and p.get("numInputRows", -1) == 0:
-                break
-    finally:
-        if q is not None and q.isActive:
-            q.stop()
-        if prev_nodata is None:
-            spark.conf.unset(_NODATA_KEY)
-        else:
-            spark.conf.set(_NODATA_KEY, prev_nodata)
+    writer = (
+        result.writeStream.format(fmt)
+        .options(**options)
+        .outputMode(output_mode)
+    )
+    _drain(writer, result.sparkSession, is_drained, timeout_s, poll_s)

@@ -284,17 +284,18 @@ def test_release_bucketed_order_tables_cleans_everything(spark, sf_dir):
     import os
 
     from data_pipeline_package_for_python_spark.queries.relational import (
-        _BUCKETED_PAIR_CACHE,
         bucketed_order_tables,
         release_bucketed_order_tables,
     )
+    from data_pipeline_package_for_python_spark.session import session_state
 
+    layouts = session_state(spark).layouts
     ob, lib = bucketed_order_tables(spark, sf_dir)
     n_orders = ob.count()
     assert n_orders > 0 and lib.count() > 0
     entries = [
-        v for k, v in _BUCKETED_PAIR_CACHE.items()
-        if k[0] == spark.sparkContext.applicationId and k[1] == sf_dir
+        v for k, v in layouts.items()
+        if k[0] == sf_dir
         and len(v[0]) == 2  # the (orders, lineitem) pair, not star
     ]
     assert entries, "build must populate the cache"
@@ -312,9 +313,7 @@ def test_release_bucketed_order_tables_cleans_everything(spark, sf_dir):
     assert not os.path.isdir(base)
     assert not spark.catalog.tableExists(names[0])
     assert not spark.catalog.tableExists(names[1])
-    assert not any(
-        k[1] == sf_dir for k in _BUCKETED_PAIR_CACHE
-    ), "cache must be emptied"
+    assert not layouts, "cache must be emptied"
     # flag restored to default (false since Spark 3.0)
     assert (
         spark.conf.get(
@@ -418,22 +417,23 @@ def test_star_layout_shares_lineitem_and_releases(spark, sf_dir):
     """The star tier must reuse the plain pair's lineitem table (one
     write serves both tiers) and be covered by the release path."""
     from data_pipeline_package_for_python_spark.queries.relational import (
-        _BUCKETED_PAIR_CACHE,
         bucketed_order_tables,
         bucketed_star_tables,
         release_bucketed_order_tables,
     )
+    from data_pipeline_package_for_python_spark.session import session_state
 
+    layouts = session_state(spark).layouts
     release_bucketed_order_tables(spark)
     _, lib_pair = bucketed_order_tables(spark, sf_dir)
-    before = len(_BUCKETED_PAIR_CACHE)
+    before = len(layouts)
     ostar, lib_star = bucketed_star_tables(spark, sf_dir)
     # exactly ONE new cache entry (the star orders); lineitem shared
-    assert len(_BUCKETED_PAIR_CACHE) == before + 1
+    assert len(layouts) == before + 1
     assert lib_star.schema == lib_pair.schema
     # star orders carries every original orders column too
     for col in ("o_orderkey", "o_custkey", "o_orderdate"):
         assert col in ostar.columns
     released = release_bucketed_order_tables(spark)
     assert released == 2  # the pair entry + the star entry
-    assert not _BUCKETED_PAIR_CACHE
+    assert not layouts

@@ -416,26 +416,25 @@ def test_codebook_broadcast_cached_and_released(spark, tables):
     share one Spark broadcast (no per-call accumulation — the leak
     class BloomSketch.release() closed for bloom bitmaps), and
     release_codebook_broadcasts() must destroy and empty the cache."""
-    from data_pipeline_package_for_python_spark.operators.similarity import (
-        _CODEBOOK_BC_CACHE,
-    )
+    from data_pipeline_package_for_python_spark.session import session_state
 
+    broadcasts = session_state(spark).broadcasts
     S.release_codebook_broadcasts()
     emb = tables["embeddings"]
     cents = S.ivf_train_centroids(emb, cells=8, lloyd_rounds=1)
     S.ivf_assign_codebook(emb, cents.codebook).count()
-    assert len(_CODEBOOK_BC_CACHE) == 1
-    bc_first = next(iter(_CODEBOOK_BC_CACHE.values()))
+    assert len(broadcasts) == 1
+    bc_first = next(iter(broadcasts.values()))
     S.ivf_assign_codebook(emb, cents.codebook).count()
-    assert len(_CODEBOOK_BC_CACHE) == 1, "same codebook → same broadcast"
-    assert next(iter(_CODEBOOK_BC_CACHE.values())) is bc_first
+    assert len(broadcasts) == 1, "same codebook → same broadcast"
+    assert next(iter(broadcasts.values())) is bc_first
     # a different codebook gets its own entry
     cents2 = S.ivf_train_centroids(emb, cells=4, lloyd_rounds=1)
     S.ivf_assign_codebook(emb, cents2.codebook).count()
-    assert len(_CODEBOOK_BC_CACHE) == 2
+    assert len(broadcasts) == 2
     released = S.release_codebook_broadcasts()
     assert released == 2
-    assert len(_CODEBOOK_BC_CACHE) == 0
+    assert len(broadcasts) == 0
     # assignment still works after release (fresh broadcast is minted)
     assert S.ivf_assign_codebook(emb, cents.codebook).count() == emb.count()
     S.release_codebook_broadcasts()

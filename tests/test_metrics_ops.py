@@ -8,18 +8,20 @@ import itertools
 import pytest
 from pyspark.sql import functions as F
 
-from data_pipeline_package_for_python_spark.queries import QUERIES, _registry
+from data_pipeline_package_for_python_spark.queries import QUERIES
+from data_pipeline_package_for_python_spark.session import session_state
 
 
 def _run(spark, name, tmp_path, **tables):
     sf = str(tmp_path)
     for t, df in tables.items():
         df.write.mode("overwrite").parquet(f"{sf}/{t}.parquet")
-    _registry._SCAN_CACHE.clear()
+    scans = session_state(spark).scans
+    scans.clear()
     try:
         return QUERIES[name].spark_fn(spark, sf)
     finally:
-        _registry._SCAN_CACHE.clear()
+        scans.clear()
 
 
 # --------------------------------------------------------------------- #

@@ -116,26 +116,32 @@ def test_q3_q5_both_paths_agree(name, spark, sf_dir):
     assert fast == slow
 
 
-def test_broadcast_gate_memo_keys_on_application_id(spark, sf_dir):
-    """The gate memo must key on the SparkContext's applicationId, not
-    ``id(spark)``: CPython recycles object ids after GC, so a stopped
-    session's id can be reused by a NEW session, which would then
-    inherit a stale size verdict.  applicationId is unique per context
-    lifetime, so a replacement session can never collide.  Pins the
-    key shape (a str app id, never an int identity) after exercising
-    the gate through both Q3 and Q5."""
-    from data_pipeline_package_for_python_spark.queries import relational as R
+def test_broadcast_gate_memo_lives_on_the_context_holder(
+    spark, sf_dir, monkeypatch
+):
+    """The gate memo lives on the SparkContext's SessionState, never in
+    a module dict a NEW context could read: a replacement context gets
+    a fresh, empty holder, so it can never inherit a stale size verdict
+    (no key to collide on, whatever ids get recycled).  Exercises the
+    gate through both Q3 and Q5, then checks that the verdicts sit on
+    the live holder and that a stand-in new context sees none of them
+    — without releasing the live holder."""
+    from types import SimpleNamespace
 
+    from data_pipeline_package_for_python_spark import session
+
+    live = session.session_state(spark)
+    before = dict(live.gates)
     for name in ("join_q3_topk", "join_star_q5"):
         QUERIES[name].spark_fn(spark, sf_dir)
-    assert R._GATE_CACHE, "gate was never consulted"
-    app_id = spark.sparkContext.applicationId
-    for key in R._GATE_CACHE:
-        assert isinstance(key[0], str), "memo key must be an app id"
-        assert key[0] == app_id
-        # a replacement session gets a fresh applicationId, so its
-        # probes can never hit this session's entries
-        assert (key[0] + "-replacement",) + key[1:] not in R._GATE_CACHE
+    assert live.gates, "gate was never consulted"
+    thr = plans.broadcast_threshold_bytes(spark)
+    assert all(k[-1] == thr for k in set(live.gates) - set(before))
+    monkeypatch.setattr(session, "_STATE", None)
+    fresh = session.session_state(SimpleNamespace(sparkContext=object()))
+    assert fresh is not live and not fresh.gates
+    monkeypatch.undo()
+    assert session.session_state(spark) is live and live.gates
 
 
 def test_near_dedup_no_cartesian_no_fact_broadcast(spark, sf_dir, tables):

@@ -346,15 +346,16 @@ def _events_fixture(spark, vals, typ="click"):
 def _run_query(spark, name, df, tmp_path):
     """Write a one-table fixture and run the registered query on it."""
     from data_pipeline_package_for_python_spark.queries import QUERIES
-    from data_pipeline_package_for_python_spark.queries import _registry
+    from data_pipeline_package_for_python_spark.session import session_state
 
     sf = str(tmp_path)
     df.write.mode("overwrite").parquet(f"{sf}/events.parquet")
-    _registry._SCAN_CACHE.clear()
+    scans = session_state(spark).scans
+    scans.clear()
     try:
         return QUERIES[name].spark_fn(spark, sf)
     finally:
-        _registry._SCAN_CACHE.clear()
+        scans.clear()
 
 
 def test_spearman_monotone_series_is_one(spark, tmp_path):
