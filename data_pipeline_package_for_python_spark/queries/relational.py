@@ -1121,26 +1121,28 @@ def join_fuzzy_levenshtein(spark, sf_dir):
     return matched.select("d_key", "d_name", "c_key", "c_name", "distance")
 
 
-def _orders_side_fits_broadcast(spark, orders_side, token=None) -> bool:
+def _orders_side_fits_broadcast(spark, orders_side, token) -> bool:
     """Stats-gated broadcast decision for the Q3/Q5 fact edge.
 
-    Probes Catalyst's size estimate of the PRE-JOIN orders scan (a pure
-    planner call, no job): the enriched frame is an inner join of that
-    scan with a dim, so ``|enriched| ≤ |orders scan| × bounded width``
-    and the scan estimate is a sound upper bound — unlike the join
-    node's own estimate, which inflates multiplicatively without CBO.
-    The bound is compared against the session's
-    ``autoBroadcastJoinThreshold`` so the gate follows the same policy
-    knob as Catalyst's planner (-1 disables it).  At the 100 TB design
-    point the scan estimate is in the terabytes and the gate always
-    declines — the unconditional ``F.broadcast`` pin this replaces
-    would have OOM'd the driver there.
+    Unlike a bare hint, the verdict picks between two FROM orders: the
+    fast path (orders broadcast, lineitem streams) and the scale path
+    (a direct shuffle join).  Probes Catalyst's size estimate of the
+    PRE-JOIN orders scan (a pure planner call, no job): the enriched
+    frame is an inner join of that scan with a dim, so ``|enriched| ≤
+    |orders scan| × bounded width`` and the scan estimate is a sound
+    upper bound — unlike the join node's own estimate, which inflates
+    multiplicatively without CBO.  The bound is compared against the
+    session's ``autoBroadcastJoinThreshold`` so the gate follows the
+    same policy knob as Catalyst's planner (-1 disables it).  At the
+    100 TB design point the scan estimate is in the terabytes and the
+    gate always declines.
 
-    The verdict is memoized per (session, lineage, threshold): the scan
-    estimate is pure metadata (parquet footer sizes) and stable for a
-    given input, while computing it forces analysis + optimization of
-    the probe frame — ~50 ms of py4j/Catalyst per call that would
-    otherwise be paid on every plan construction."""
+    ``orders_side`` is a zero-arg thunk returning the probe frame, and
+    the verdict is memoized per ``(token, threshold)`` on the context's
+    SessionState, with ``token`` naming the (query, dataset) pair.  The
+    scan estimate is pure metadata (parquet footer sizes) and stable
+    for a given input, while building and pricing the probe frame costs
+    eager analyzer passes plus an optimization, so a hit skips both."""
     from .. import plans
 
     thr = plans.broadcast_threshold_bytes(spark)
@@ -1149,22 +1151,9 @@ def _orders_side_fits_broadcast(spark, orders_side, token=None) -> bool:
     # the memo lives on the context's SessionState: a new context starts
     # with an empty one, so it can never inherit a stale verdict.
     gates = session_state(spark).gates
-    if token is not None:
-        # Fast memo: a caller-supplied (query, dataset) token lets the
-        # verdict be reused WITHOUT re-building the probe frame at all —
-        # constructing it costs 2 eager analyzer passes (~30 ms of the
-        # old per-run build), and ``orders_side`` may then be passed as
-        # a zero-arg thunk that is only invoked on a miss.
-        hit = gates.get((token, thr))
-        if hit is not None:
-            return hit
-    frame = orders_side() if callable(orders_side) else orders_side
-    key = (frame._jdf.queryExecution().logical().semanticHash(), thr)
-    hit = gates.get(key)
+    hit = gates.get((token, thr))
     if hit is None:
-        hit = plans.estimated_size_bytes(frame) <= thr
-        gates[key] = hit
-    if token is not None:
+        hit = plans.estimated_size_bytes(orders_side()) <= thr
         gates[(token, thr)] = hit
     return hit
 

@@ -21,10 +21,13 @@ BIGINT/BIGINT division both engines lower to the same double.
 
 Scale posture shared by the module: true dims (region/nation/supplier —
 fixed or near-fixed cardinality) broadcast unconditionally; the
-orders↔lineitem fact edge goes through the same stats-gated
-``_orders_side_fits_broadcast`` probe as Q3/Q5, so at the 100 TB design
-point every query here degrades to a shuffle join on the already
-key-partitioned orderkey instead of OOMing the driver.
+orders↔lineitem fact edge carries no hint.  Catalyst's own
+``autoBroadcastJoinThreshold`` rule decides it, from the same size
+estimate and the same ``-1`` off-switch the Q3/Q5 gate reads, priced on
+the pruned and filtered ``orders`` side it actually joins.  At the
+100 TB design point that estimate is far over any threshold, so every
+query here degrades to a shuffle join on the orderkey instead of
+broadcasting fact data.
 
 Build discipline (round 12, guide §4 applied at plan-build time): every
 query here is ONE ``spark.sql()`` statement (Q11/Q15 are two, split at a
@@ -33,17 +36,13 @@ DataFrame chains run the analyzer eagerly per transformation — the r11
 decomposition measured 12-71% of per-run cost as pure driver-side
 py4j/analyzer work, and the round-12 pure-build probe put this module at
 2.59 s per registry sweep.  Join ORDER in each FROM clause plus explicit
-``/*+ BROADCAST */`` hints reproduce the old DataFrame join shapes
-(Catalyst keeps written order without CBO); the stats gate keeps its
-decline-at-scale semantics via a per-(query, dataset) token memo.
+``/*+ BROADCAST */`` hints on the dims reproduce the old DataFrame join
+shapes (Catalyst keeps written order without CBO).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from ._registry import load, query
-from .relational import _orders_side_fits_broadcast
 
 _UNITS = "floor((l_extendedprice * (1 - l_discount)) * 10000 + 0.5d)"
 _SQL_UNITS = (
@@ -91,39 +90,17 @@ def join_q7_nation_trade(spark, sf_dir):
 
     Scale: supplier⋈nation (≤ 10⁴ rows at any SF) broadcasts into the
     lineitem scan map-side, as does customer⋈nation into orders; the
-    one fact-sized exchange is the gated orderkey edge, and the final
-    rollup groups ≤ 2·|years| rows."""
+    orderkey edge is Catalyst's threshold call (a shuffle at scale),
+    and the final rollup groups ≤ 2·|years| rows."""
     n = load(spark, sf_dir, "nation")
     s = load(spark, sf_dir, "supplier")
     c = load(spark, sf_dir, "customer")
     o = load(spark, sf_dir, "orders")
     li = load(spark, sf_dir, "lineitem")
-    # Gate prices the pruned orders side actually joined (orders after
-    # the nation-filtered customer semireduction); the thunk only builds
-    # the probe frame on a token-memo miss.
-    o_hint = (
-        ", BROADCAST(o)"
-        if _orders_side_fits_broadcast(
-            spark,
-            lambda: o.join(
-                F.broadcast(
-                    c.join(
-                        F.broadcast(n),
-                        F.col("c_nationkey") == F.col("n_nationkey"),
-                    )
-                    .filter(F.col("n_name").isin("NATION_1", "NATION_2"))
-                    .select("c_custkey")
-                ),
-                F.col("o_custkey") == F.col("c_custkey"),
-            ).select("o_orderkey"),
-            token=("q7_orders", sf_dir),
-        )
-        else ""
-    )
     return spark.sql(
         f"""
         SELECT /*+ BROADCAST(s), BROADCAST(n1), BROADCAST(c),
-                   BROADCAST(n2){o_hint} */
+                   BROADCAST(n2) */
                n1.n_name AS supp_nation,
                n2.n_name AS cust_nation,
                year(l.l_shipdate) AS l_year,
@@ -181,8 +158,8 @@ def join_q8_market_share(spark, sf_dir):
     Exactness: numerator and denominator are both BIGINT unit sums;
     the share is one BIGINT/BIGINT division both engines lower to the
     identical double.  Scale: part/supplier/customer enrichments are
-    broadcast map-side; the single fact exchange is the gated orderkey
-    edge; output is |years| rows."""
+    broadcast map-side; the orderkey edge is Catalyst's threshold
+    call (the single fact exchange at scale); output is |years| rows."""
     n = load(spark, sf_dir, "nation")
     r = load(spark, sf_dir, "region")
     p = load(spark, sf_dir, "part")
@@ -190,36 +167,11 @@ def join_q8_market_share(spark, sf_dir):
     c = load(spark, sf_dir, "customer")
     o = load(spark, sf_dir, "orders")
     li = load(spark, sf_dir, "lineitem")
-    o_hint = (
-        ", BROADCAST(o)"
-        if _orders_side_fits_broadcast(
-            spark,
-            lambda: o.join(
-                F.broadcast(
-                    c.join(
-                        F.broadcast(
-                            n.join(
-                                F.broadcast(r),
-                                F.col("n_regionkey")
-                                == F.col("r_regionkey"),
-                            ).select("n_nationkey", "r_name")
-                        ),
-                        F.col("c_nationkey") == F.col("n_nationkey"),
-                    )
-                    .filter(F.col("r_name") == "AMERICA")
-                    .select("c_custkey")
-                ),
-                F.col("o_custkey") == F.col("c_custkey"),
-            ).select("o_orderkey"),
-            token=("q8_orders", sf_dir),
-        )
-        else ""
-    )
     return spark.sql(
         f"""
         SELECT /*+ BROADCAST(p), BROADCAST(s), BROADCAST(ns),
                    BROADCAST(rs), BROADCAST(c), BROADCAST(nc),
-                   BROADCAST(rc){o_hint} */
+                   BROADCAST(rc) */
                year(o.o_orderdate) AS o_year,
                sum(CASE WHEN rs.r_name = 'ASIA'
                         THEN {_UNITS} ELSE CAST(0 AS BIGINT) END)
@@ -272,35 +224,26 @@ def join_q9_profit(spark, sf_dir):
     is written with the identical association on both engines before
     the floor-to-units fold, so the unit sums agree bit-for-bit.
 
-    Scale: part filter and supplier⋈nation broadcast; one gated
-    orderkey edge; |nations|·|years| output rows."""
+    Scale: part filter and supplier⋈nation broadcast; the orderkey
+    edge is Catalyst's threshold call; |nations|·|years| output rows."""
     n = load(spark, sf_dir, "nation")
     p = load(spark, sf_dir, "part")
     s = load(spark, sf_dir, "supplier")
     o = load(spark, sf_dir, "orders")
     li = load(spark, sf_dir, "lineitem")
-    o_hint = (
-        ", BROADCAST(o)"
-        if _orders_side_fits_broadcast(
-            spark,
-            lambda: o.select("o_orderkey"),
-            token=("q9_orders", sf_dir),
-        )
-        else ""
-    )
     return spark.sql(
-        f"""
-        SELECT /*+ BROADCAST(p), BROADCAST(s), BROADCAST(n){o_hint} */
+        """
+        SELECT /*+ BROADCAST(p), BROADCAST(s), BROADCAST(n) */
                n.n_name AS nation,
                year(o.o_orderdate) AS o_year,
                sum(floor((l_extendedprice * (1 - l_discount)
                    - 0.6d * p_retailprice * l_quantity)
                    * 10000 + 0.5d)) / cast(10000 as double) AS sum_profit
-        FROM {{li}} l
-        JOIN {{p}} p ON l.l_partkey = p.p_partkey
-        JOIN {{s}} s ON l.l_suppkey = s.s_suppkey
-        JOIN {{n}} n ON s.s_nationkey = n.n_nationkey
-        JOIN {{o}} o ON l.l_orderkey = o.o_orderkey
+        FROM {li} l
+        JOIN {p} p ON l.l_partkey = p.p_partkey
+        JOIN {s} s ON l.l_suppkey = s.s_suppkey
+        JOIN {n} n ON s.s_nationkey = n.n_nationkey
+        JOIN {o} o ON l.l_orderkey = o.o_orderkey
         WHERE p.p_name LIKE '%red%'
         GROUP BY 1, 2
         """,
@@ -344,22 +287,10 @@ def join_q10_returned_customers(spark, sf_dir):
     c = load(spark, sf_dir, "customer")
     o = load(spark, sf_dir, "orders")
     li = load(spark, sf_dir, "lineitem")
-    o_hint_lead = (
-        "/*+ BROADCAST(o) */ "
-        if _orders_side_fits_broadcast(
-            spark,
-            lambda: o.filter(
-                (F.col("o_orderdate") >= "1996-07-01")
-                & (F.col("o_orderdate") < "1996-10-01")
-            ).select("o_orderkey", "o_custkey"),
-            token=("q10_orders", sf_dir),
-        )
-        else ""
-    )
     return spark.sql(
         f"""
         WITH per_cust AS (
-          SELECT {o_hint_lead}o.o_custkey, sum({_UNITS}) AS rev_units
+          SELECT o.o_custkey, sum({_UNITS}) AS rev_units
           FROM {{li}} l
           JOIN {{o}} o ON l.l_orderkey = o.o_orderkey
           WHERE l.l_returnflag = 'R'
@@ -479,21 +410,9 @@ def join_q12_late_priority(spark, sf_dir):
     sums fold map-side."""
     o = load(spark, sf_dir, "orders")
     li = load(spark, sf_dir, "lineitem")
-    o_hint_lead = (
-        "/*+ BROADCAST(o) */ "
-        if _orders_side_fits_broadcast(
-            spark,
-            lambda: o.filter(
-                (F.col("o_orderdate") >= "1996-01-01")
-                & (F.col("o_orderdate") < "1997-01-01")
-            ).select("o_orderkey", "o_orderdate", "o_orderpriority"),
-            token=("q12_orders", sf_dir),
-        )
-        else ""
-    )
     return spark.sql(
-        f"""
-        SELECT {o_hint_lead}l.l_returnflag,
+        """
+        SELECT l.l_returnflag,
                cast(sum(CASE WHEN o.o_orderpriority
                                   IN ('1-URGENT', '2-HIGH')
                              THEN 1 ELSE 0 END) AS BIGINT)
@@ -502,8 +421,8 @@ def join_q12_late_priority(spark, sf_dir):
                                   IN ('1-URGENT', '2-HIGH')
                              THEN 0 ELSE 1 END) AS BIGINT)
                  AS low_line_count
-        FROM {{li}} l
-        JOIN {{o}} o ON l.l_orderkey = o.o_orderkey
+        FROM {li} l
+        JOIN {o} o ON l.l_orderkey = o.o_orderkey
         WHERE o.o_orderdate >= TIMESTAMP '1996-01-01'
           AND o.o_orderdate <  TIMESTAMP '1997-01-01'
           AND l.l_shipdate > o.o_orderdate + INTERVAL 90 DAYS
@@ -796,30 +715,22 @@ def join_q21_waiting_suppliers(spark, sf_dir):
     every qualifying supplier surfaces, keeping the result
     order-insensitive.
 
-    Scale: one gated orderkey edge; per-order supplier counts and the
-    distinct late-pair set reuse the same orderkey partitioning, so
-    the verdict join is co-partitioned; output is ≤ |suppliers|."""
+    Scale: the orderkey edge is Catalyst's threshold call (a shuffle
+    join at scale); per-order supplier counts and the distinct
+    late-pair set reuse the same orderkey partitioning, so the verdict
+    join is co-partitioned; output is ≤ |suppliers|."""
     o = load(spark, sf_dir, "orders")
     li = load(spark, sf_dir, "lineitem")
     s = load(spark, sf_dir, "supplier")
-    o_hint_lead = (
-        "/*+ BROADCAST(o) */ "
-        if _orders_side_fits_broadcast(
-            spark,
-            lambda: o.select("o_orderkey", "o_orderdate"),
-            token=("q21_orders", sf_dir),
-        )
-        else ""
-    )
     return spark.sql(
-        f"""
+        """
         WITH j AS (
-          SELECT {o_hint_lead}l.l_orderkey, l.l_suppkey,
+          SELECT l.l_orderkey, l.l_suppkey,
                  CAST((l.l_shipdate
                        > o.o_orderdate + INTERVAL 90 DAYS) AS INT)
                    AS is_late
-          FROM {{li}} l
-          JOIN {{o}} o ON l.l_orderkey = o.o_orderkey
+          FROM {li} l
+          JOIN {o} o ON l.l_orderkey = o.o_orderkey
         ), per_order AS (
           SELECT l_orderkey
           FROM j
@@ -836,7 +747,7 @@ def join_q21_waiting_suppliers(spark, sf_dir):
               FROM late_pairs lp
               JOIN per_order po ON lp.l_orderkey = po.l_orderkey
               GROUP BY 1) cnt
-        JOIN {{s}} s ON cnt.l_suppkey = s.s_suppkey
+        JOIN {s} s ON cnt.l_suppkey = s.s_suppkey
         """,
         li=li, o=o, s=s,
     )

@@ -22,7 +22,7 @@ from types import SimpleNamespace
 
 import pytest
 
-from data_pipeline_package_for_python_spark import session
+from data_pipeline_package_for_python_spark import plans, session
 from data_pipeline_package_for_python_spark.queries import relational
 
 PKG = pathlib.Path(session.__file__).parent
@@ -192,21 +192,28 @@ def test_staged_dir_builds_once_and_drops_failed_builds(isolated_state):
 
 
 def test_live_session_entries_survive_miss_path(spark, sf_dir):
-    """A real gate miss adds to the live holder without evicting or
-    replacing anything in it."""
+    """A real gate miss adds exactly its one (token, threshold) verdict
+    to the live holder without evicting or replacing anything in it;
+    a repeat call is served from that entry without rebuilding the
+    probe frame."""
     state = session.session_state(spark)
     live_key = (("test-live-token",), 123)
     state.gates[live_key] = False
+    token = ("test-miss-token", sf_dir)
+    thr = plans.broadcast_threshold_bytes(spark)
+    builds = []
+
+    def probe():
+        builds.append(token)
+        return relational.load(spark, sf_dir, "orders")
+
     try:
-        token = ("test-miss-token", sf_dir)
-        relational._orders_side_fits_broadcast(
-            spark,
-            lambda: relational.load(spark, sf_dir, "orders"),
-            token=token,
-        )
+        before = dict(state.gates)
+        verdict = relational._orders_side_fits_broadcast(spark, probe, token)
         assert session.session_state(spark) is state
-        assert state.gates[live_key] is False
-        thr = next(k[1] for k in state.gates if k[0] == token)
-        assert (token, thr) in state.gates
+        assert state.gates == {**before, (token, thr): verdict}
+        again = relational._orders_side_fits_broadcast(spark, probe, token)
+        assert again is verdict and builds == [token]
     finally:
         state.gates.pop(live_key, None)
+        state.gates.pop((token, thr), None)

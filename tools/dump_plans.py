@@ -2,11 +2,13 @@
 """Dump ``explain("formatted")`` for named registry queries.
 
 Usage:
-    python tools/dump_plans.py before name [name ...]
-    python tools/dump_plans.py after  name [name ...]
+    python tools/dump_plans.py OUT_DIR before name [name ...]
+    python tools/dump_plans.py OUT_DIR after  name [name ...]
 
-Writes ``plans/r12/<name>_<suffix>.txt`` — the judge checks optimization
-claims against these files, so they are committed.
+Writes ``OUT_DIR/<name>_<suffix>.txt``, one directory per change (for
+example ``plans/r12``), so a later dump never overwrites an earlier
+change's evidence.  The fixture scale comes from ``SPARK_GRAFT_CHECK_SF``
+(default sf0.01).
 """
 
 from __future__ import annotations
@@ -17,22 +19,18 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_CHECK_SF", "/root/testdata/sf0.01")
-OUT_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "plans",
-    "r12",
-)
 
 
 def main() -> None:
-    suffix = sys.argv[1]
-    names = sys.argv[2:]
+    if len(sys.argv) < 4:
+        sys.exit(__doc__)
+    out_dir, suffix, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     from data_pipeline_package_for_python_spark.queries import QUERIES
     from data_pipeline_package_for_python_spark.session import get_spark
 
     spark = get_spark(app_name=f"dump-plans-{suffix}")
     spark.sparkContext.setLogLevel("ERROR")
-    os.makedirs(OUT_DIR, exist_ok=True)
+    os.makedirs(out_dir, exist_ok=True)
     for name in names:
         df = QUERIES[name].spark_fn(spark, SF_DIR)
         text = df._jdf.queryExecution().explainString(
@@ -40,7 +38,7 @@ def main() -> None:
                 "formatted"
             )
         )
-        path = os.path.join(OUT_DIR, f"{name}_{suffix}.txt")
+        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(text)
         print(f"{name}: {len(text.splitlines())} lines -> {path}")
